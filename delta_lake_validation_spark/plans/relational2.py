@@ -434,15 +434,31 @@ def sql_entry_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus sorts inside 3 tasks (the same hot-key-window class the r7
 # de-skews removed).  The scale-safe identical-result form is selection by
 # rank: distributed_rank (two-pass range prefix, no corpus-sized task)
-# gives every row its 1-based position in the per-flag price order; the
-# percentile is then interpolated from the ≤2 rows whose ranks bracket
-# pos = q·(n−1), using Spark's own formula
-#     lower + (pos − floor(pos)) · (upper − lower)
-# verified BIT-exact against percentile() on 100k random doubles at four
-# q values and pinned at three SFs + adversarial fixtures in
-# tests/test_exact_agg_properties.py::test_distributed_percentile_bitwise.
-# Ties in price are interchangeable at equal values, so the unique
-# (orderkey, linenumber) tiebreaker cannot change the selected values.
+# gives every row its 1-based position in the per-flag value order; the
+# percentile is then taken from the ≤2 rows whose ranks bracket
+# pos = q·(n−1), lo = floor(pos), hi = ceil(pos), with Spark's own rule
+# (Percentile.getPercentile):
+#     lo == hi             -> v[lo]       (integral position)
+#     v[lo] == v[hi]       -> v[lo]       (equal bracketing values)
+#     otherwise            -> (hi − pos)·v[lo] + (pos − lo)·v[hi]
+# Each part matters bitwise: the difference form
+# v[lo] + (pos − lo)·(v[hi] − v[lo]) rounds differently from the weighted
+# form and turns a lone -0.0 into +0.0, and the weighted form alone does
+# not return v exactly for two equal values v.
+# Spark SQL's sort treats -0.0 and +0.0 as equal, so the (orderkey,
+# linenumber) tiebreak alone would decide which zero gets which rank.
+# percentile() sorts its value->count map with the zeros equal too, and in
+# practice puts -0.0 first (the java.lang.Double.compare / IEEE 754
+# totalOrder order), so the order key ranks -0.0 before +0.0 explicitly.
+# Other value ties are interchangeable: the tiebreak cannot change them.
+# Not promised: a group holding both -0.0 and +0.0 whose bracketing ranks
+# fall among those zeros.  There the sign of percentile()'s own result
+# follows the map's hash order after the merge, which depends on the
+# partitioning of its input (one 34-value multiset gave +0.0 from 1 input
+# partition and -0.0 from 2, 3, 4 or 6); no fixed rank order can match it,
+# and this plan keeps -0.0 first.
+# Pinned by tests/test_exact_agg_properties.py::
+# test_distributed_percentile_bitwise.
 # ---------------------------------------------------------------------------
 _PCT_QS = (("median_price", 0.5), ("p90_price", 0.9))
 
@@ -456,15 +472,28 @@ def _distributed_percentiles(
     qs=_PCT_QS,
 ) -> DataFrame:
     """(key, <name> double ...): exact linear-interpolation percentiles of
-    ``value_col`` per ``key`` — bit-identical to ``F.percentile`` — via
-    rank selection instead of a per-group value buffer.  ``vals`` must be
-    null-free in ``value_col``; ``counts`` carries (key, __n) with the
-    non-null count per key (keys with __n = 0 yield NULLs, matching the
-    aggregate's ignore-nulls contract)."""
+    ``value_col`` per ``key`` via rank selection instead of a per-group
+    value buffer.  Bit-identical to ``F.percentile``: an integral position
+    or equal bracketing values return the lower value, otherwise
+    ``(hi − pos)·v[lo] + (pos − lo)·v[hi]``, with -0.0 ranked before +0.0.
+    The one exception is a group with zeros of both signs at the bracketing
+    ranks, where ``F.percentile``'s own sign depends on its input's
+    partitioning (see the comment above).  ``vals`` must be null-free in
+    ``value_col``; ``tiebreak`` must make the order unique; ``counts``
+    carries (key, __n) with the non-null count per key (keys with __n = 0
+    yield NULLs, matching the aggregate's ignore-nulls contract)."""
     from delta_lake_validation_spark.functions.prefix import distributed_rank
 
+    v = F.col(value_col)
+    # false for -0.0, true for +0.0: ranks -0.0 first, which Spark SQL's
+    # sort alone does not (it treats the two zeros as equal); NULL for every
+    # non-zero value, whose order the value column already decides
+    is_pos_zero = F.when(v == 0.0, ~v.cast("string").startswith("-"))
     ranked = distributed_rank(
-        vals, order_by=[value_col, *tiebreak], partition_by=[key], out="__rk"
+        vals,
+        order_by=[v, is_pos_zero, *tiebreak],
+        partition_by=[key],
+        out="__rk",
     )
     tgt = (
         counts.filter(F.col("__n") >= 1)
@@ -500,11 +529,13 @@ def _distributed_percentiles(
             | (F.col("__rk") == F.col("__hi") + 1)
         ),
     ).select(ranked[key].alias(key), value_col, "__rk", "__q", "__pos", "__lo", "__hi")
-    interp = F.col("__vlo") + (
-        F.col("__pos") - F.col("__lo").cast("double")
-    ) * (F.col("__vhi") - F.col("__vlo"))
+    lo, hi, pos = F.col("__lo"), F.col("__hi"), F.col("__pos")
+    vlo, vhi = F.col("__vlo"), F.col("__vhi")
+    interp = F.when((lo == hi) | (vlo == vhi), vlo).otherwise(
+        (hi.cast("double") - pos) * vlo + (pos - lo.cast("double")) * vhi
+    )
     per_q = (
-        picked.groupBy(key, "__q", "__pos", "__lo")
+        picked.groupBy(key, "__q", "__pos", "__lo", "__hi")
         .agg(
             F.min(
                 F.when(F.col("__rk") == F.col("__lo") + 1, F.col(value_col))

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from decimal import Decimal
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -124,6 +124,14 @@ def test_asof_join_matches_reference(spark, lefts, rights, strict):
     ),
     parts=st.integers(1, 5),
 )
+# Each row pins one part of Percentile.getPercentile's rule on every run:
+# the weighted (hi − pos)·v[lo] + (pos − lo)·v[hi] form, the integral-position
+# short-circuit (a lone -0.0 keeps its sign), the equal-values short-circuit,
+# and -0.0 ranked before +0.0.
+@example(groups=[[28810.0, 1.0]], parts=1)
+@example(groups=[[-0.0]], parts=1)
+@example(groups=[[123.456, 123.456]], parts=1)
+@example(groups=[[0.0, -0.0]], parts=1)
 def test_distributed_percentile_bitwise(spark, groups, parts):
     import struct
 
