@@ -1,13 +1,20 @@
-"""Read-only source for real Delta Lake tables (the ``_delta_log`` protocol).
+"""Delta Lake tables (the ``_delta_log`` protocol), read and written
+without delta-spark.
 
-The engine's own ACID layer (sources/acid) uses its own log format; this
-module closes the interop gap with tables the reference creates
-(``CREATE TABLE ... USING DELTA``, ref src/validation_suite.py:268-286):
-every such table is a directory of parquet data files plus a ``_delta_log``
-of JSON commits and periodic parquet checkpoints.  We replay that log into a
-snapshot and serve reads, time travel, history and detail — the read half of
-the Delta protocol (https://github.com/delta-io/delta/blob/master/PROTOCOL.md),
-reimplemented from the published spec (no delta-spark dependency).
+A Delta table is a directory of parquet data files plus a ``_delta_log`` of
+JSON commits and periodic parquet checkpoints (ref
+src/validation_suite.py:268-286 creates them with ``USING DELTA``).
+``DeltaTable`` replays that log into a snapshot and serves reads, time
+travel, ``read_where`` file skipping, the Change Data Feed
+(``read_changes``, ref src/validation_suite.py:480-486), history and
+detail.  It also writes: ``append``/``overwrite``, row-level ``delete``/
+``update``/``merge_upsert``/``merge`` (file rewrites, or deletion vectors
+when the table enables them, plus ``_change_data`` files when CDF is on),
+schema and property changes, ``optimize``, ``vacuum``, ``cleanup_log`` and
+``restore``; each commit is an exclusive create of the next log file.  The
+module functions create, clone, convert, checkpoint and exchange tables
+with the engine's own ACID layer (sources/acid).  Everything follows the
+published spec (https://github.com/delta-io/delta/blob/master/PROTOCOL.md).
 
 Protocol coverage rationale: the reference pins delta-spark 2.3.0
 (ref pyproject.toml:8-12), so every table it can produce uses reader
@@ -16,8 +23,8 @@ including classic checkpoints, CDF, and name-mode column mapping.
 Reader-v3 features a MODERN writer pointed at the same tables would emit
 are supported too: deletion vectors (sources/dv.py; row filtering,
 bitmap-diff CDF) and v2 checkpoint manifests (json/parquet + sidecars).
-What we cannot serve correctly (id-mode column mapping) is *detected and
-refused* rather than silently misread.
+What we cannot serve correctly (id-mode files whose footers disagree with
+the schema) is *detected and refused* rather than silently misread.
 
 Scale notes:
 - The log replay is driver-side but bounded: one checkpoint parquet read
@@ -25,17 +32,20 @@ Scale notes:
   plus the JSON tail since the checkpoint (at most ``checkpointInterval``
   small files).  The data read itself is a plain distributed parquet scan,
   so predicate pushdown / column pruning / partition pruning all apply.
-- Partition values come from the log's ``partitionValues`` maps, attached
-  via Hive-style partition discovery when the file layout allows (one scan,
-  prunable) and per-partition literal stamping otherwise.
+- One method, ``DeltaTable._scan_files``, turns log file entries into that
+  scan, for snapshots, DML targeting scans and each commit's change feed.
+  Partition values come from the entries' ``partitionValues``: one
+  Hive-style partition-discovery scan when the file layout encodes them
+  (prunable), one scan per distinct partition tuple with the values
+  stamped in as literals otherwise.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -64,7 +74,7 @@ _SUPPORTED_READER_FEATURES = {
     "columnMapping",  # name AND id modes implemented (id mode verifies
     # parquet footer field-ids against the schema, _verify_field_ids)
     "deletionVectors",  # sources/dv.py codec; applied per-scan in
-    # _read_snapshot via _metadata.row_index membership filtering
+    # _scan_files via _metadata.row_index membership filtering
     "v2Checkpoint",  # UUID-named json/parquet manifests + _sidecars/
     # parquet action files (_checkpoint_actions); classic checkpoints
     # still preferred when both exist at the same version
@@ -806,8 +816,15 @@ class DeltaTable:
                 return v
         raise ValueError(f"no commit at or after {ts}")
 
-    def _commit_ts_ms(self, version: int) -> int | None:
-        for action in self._commit_actions(version):
+    def _commit_ts_ms(
+        self, version: int, actions: list[dict] | None = None
+    ) -> int | None:
+        """Commit time in ms: ``inCommitTimestamp``, else
+        ``commitInfo.timestamp``, else the commit file's mtime.  Pass the
+        already-parsed ``actions`` to skip re-reading the commit."""
+        if actions is None:
+            actions = self._commit_actions(version)
+        for action in actions:
             info = action.get("commitInfo")
             if info and "inCommitTimestamp" in info:
                 # inCommitTimestamp feature: the writer-recorded monotonic
@@ -877,63 +894,79 @@ class DeltaTable:
         # with a positional struct cast (identity when no mapping)
         if snap.mapping_mode == "id":
             self._verify_field_ids(snap)
-        phys_schema = snap.physical_schema()
-        phys_parts = [snap.phys(c) for c in snap.partition_columns]
-        data_schema = StructType(
-            [f for f in phys_schema.fields if f.name not in phys_parts]
-        )
+        df = self._scan_files(snap, snap.files, snap.physical_schema())
+        return df.select(*self._logical_cols(snap))
 
-        def to_logical(df: DataFrame) -> DataFrame:
-            return df.select(
-                *[
-                    F.col(snap.phys(f.name)).cast(f.dataType).alias(f.name)
-                    for f in snap.schema.fields
-                ]
-            )
+    @staticmethod
+    def _logical_cols(snap: DeltaSnapshot) -> list:
+        """The snapshot's logical columns, selected from physical ones."""
+        return [
+            F.col(snap.phys(f.name)).cast(f.dataType).alias(f.name)
+            for f in snap.schema.fields
+        ]
 
-        if not snap.files:
-            return self.spark.createDataFrame([], snap.schema)
-        dv_map = self._dv_map(snap)
-        paths = [self._abs(p) for p in snap.files]
-        if not snap.partition_columns:
-            return to_logical(
-                self._dv_filter(
-                    self.spark.read.schema(phys_schema).parquet(*paths), dv_map
+    def _scan_files(
+        self,
+        snap: DeltaSnapshot,
+        entries: dict[str, dict],
+        schema: StructType,
+        base: str = "",
+        dv_map: dict[str, object] | None = None,
+        keep_member: bool = False,
+        pos: bool = False,
+    ) -> DataFrame:
+        """One parquet scan over log file entries ({log path: add/remove/cdc
+        action}).  ``schema`` is the PHYSICAL read schema, partition columns
+        included; the frame keeps physical names.  The entries' deletion
+        vectors drop their rows, or, given ``dv_map`` and ``keep_member``,
+        exactly that map's bitmap rows are kept.  ``pos`` adds ``__fp``/
+        ``__ri`` (``_metadata`` file path and row index), taken before any
+        union, which ``_metadata`` does not survive.
+
+        When every file sits under ``<table>/<base>/`` in directories that
+        encode its partitionValues, one partition-discovery scan serves them
+        all (partition filters prune it).  Otherwise (non-Hive layouts,
+        shallow-cloned external files, unpartitioned tables) each distinct
+        partitionValues tuple gets one scan with the values stamped in as
+        literals, and the scans are unioned."""
+        parts = [snap.phys(c) for c in snap.partition_columns]
+        if dv_map is None:
+            dv_map = self._dv_map(entries)
+
+        def scan(reader, paths: list[str]) -> DataFrame:
+            df = self._dv_filter(reader.parquet(*paths), dv_map, keep_member)
+            if pos:
+                df = df.select(
+                    "*",
+                    F.col("_metadata.file_path").alias("__fp"),
+                    F.col("_metadata.row_index").alias("__ri"),
                 )
-            )
-        if self._hive_layout(snap, phys_parts):
-            # every file sits at .../col=value/... consistent with its
-            # partitionValues: one partition-discovery scan, fully prunable.
-            # The FULL schema (partition fields included, with their true
+            return df
+
+        if parts and self._hive_layout(entries, parts, base):
+            # the FULL schema (partition fields included, with their true
             # types) is passed so discovery never runs type inference — a
             # string partition value like '0123' or '1.10' would otherwise
-            # be inferred numeric and silently reformatted.
-            df = (
-                self.spark.read.schema(phys_schema)
-                .option("basePath", self.location)
-                .parquet(*paths)
+            # be inferred numeric and silently reformatted
+            reader = self.spark.read.schema(schema).option(
+                "basePath", f"{self.location}/{base}" if base else self.location
             )
-            return to_logical(self._dv_filter(df, dv_map))
-        # non-Hive layout (e.g. random file names at the root): group files
-        # by their partitionValues tuple and stamp literals per group
-        groups: dict[tuple, list[str]] = {}
-        for p, a in snap.files.items():
-            key = tuple(
-                (a.get("partitionValues") or {}).get(c) for c in phys_parts
-            )
+            return scan(reader, [self._abs(p) for p in entries])
+        data_schema = StructType([f for f in schema.fields if f.name not in parts])
+        # no entries: one empty scan
+        groups: dict[tuple, list[str]] = {} if entries else {(): []}
+        for p, a in entries.items():
+            key = tuple((a.get("partitionValues") or {}).get(c) for c in parts)
             groups.setdefault(key, []).append(self._abs(p))
         out = None
-        for key, gpaths in groups.items():
-            df = self._dv_filter(
-                self.spark.read.schema(data_schema).parquet(*gpaths), dv_map
+        for key, paths in groups.items():
+            df = scan(self.spark.read.schema(data_schema), paths).withColumns(
+                {
+                    snap.phys(c): F.lit(raw).cast(snap.schema[c].dataType)
+                    for c, raw in zip(snap.partition_columns, key)
+                }
             )
-            for c, raw in zip(snap.partition_columns, key):
-                typ = snap.schema[c].dataType
-                df = df.withColumn(
-                    snap.phys(c),
-                    F.lit(raw).cast(typ) if raw is not None else F.lit(None).cast(typ),
-                )
-            out = to_logical(df) if out is None else out.unionByName(to_logical(df))
+            out = df if out is None else out.unionByName(df)
         return out
 
     # ----------------------------------------------- column mapping (id mode)
@@ -2925,64 +2958,15 @@ class DeltaTable:
                 if c
             ]
             phys_schema = StructType(list(phys_schema.fields) + extra)
-        phys_parts = [snap.phys(c) for c in snap.partition_columns]
-        data_schema = StructType(
-            [f for f in phys_schema.fields if f.name not in phys_parts]
-        )
-        dv_map = self._dv_map(snap)
-
-        def sel(df: DataFrame) -> DataFrame:
-            cols = [
-                F.col(snap.phys(f.name)).cast(f.dataType).alias(f.name)
-                for f in snap.schema.fields
-            ] + [
-                F.col("_metadata.file_path").alias("__fp"),
-                F.col("_metadata.row_index").alias("__ri"),
-            ]
-            if rt:
-                cols.append(
-                    (df[rid_col] if rid_col else F.lit(None).cast("long"))
-                    .alias("__mat_rid")
-                )
-                cols.append(
-                    (df[rcv_col] if rcv_col else F.lit(None).cast("long"))
-                    .alias("__mat_rcv")
-                )
+        df = self._scan_files(snap, snap.files, phys_schema, pos=True)
+        cols = self._logical_cols(snap) + ["__fp", "__ri"]
+        if not rt:
             return df.select(*cols)
-
-        def fin(df: DataFrame) -> DataFrame:
-            return self._rt_with_current_ids(df, snap) if rt else df
-
-        paths = [self._abs(p) for p in snap.files]
-        if not snap.partition_columns:
-            df = self.spark.read.schema(phys_schema).parquet(*paths)
-            return fin(sel(self._dv_filter(df, dv_map)))
-        if self._hive_layout(snap, phys_parts):
-            df = (
-                self.spark.read.schema(phys_schema)
-                .option("basePath", self.location)
-                .parquet(*paths)
-            )
-            return fin(sel(self._dv_filter(df, dv_map)))
-        groups: dict[tuple, list[str]] = {}
-        for p, a in snap.files.items():
-            key = tuple(
-                (a.get("partitionValues") or {}).get(c) for c in phys_parts
-            )
-            groups.setdefault(key, []).append(self._abs(p))
-        out = None
-        for key, gpaths in groups.items():
-            df = self._dv_filter(
-                self.spark.read.schema(data_schema).parquet(*gpaths), dv_map
-            )
-            for c, raw in zip(snap.partition_columns, key):
-                typ = snap.schema[c].dataType
-                df = df.withColumn(
-                    snap.phys(c),
-                    F.lit(raw).cast(typ) if raw is not None else F.lit(None).cast(typ),
-                )
-            out = sel(df) if out is None else out.unionByName(sel(df))
-        return fin(out)
+        cols += [
+            (F.col(c) if c else F.lit(None).cast("long")).alias(alias)
+            for c, alias in ((rid_col, "__mat_rid"), (rcv_col, "__mat_rcv"))
+        ]
+        return self._rt_with_current_ids(df.select(*cols), snap)
 
     def _target_bitmaps(
         self, snap: DeltaSnapshot, matched: DataFrame
@@ -4242,8 +4226,8 @@ class DeltaTable:
         return v
 
     # ------------------------------------------------------ deletion vectors
-    def _dv_map(self, snap: DeltaSnapshot) -> dict[str, object]:
-        """{normalized data-file path: DV entry} for every live file
+    def _dv_map(self, entries: dict[str, dict]) -> dict[str, object]:
+        """{normalized data-file path: DV entry} for every log entry
         carrying a deletion vector.  Entries are DESCRIPTORS (dv.py
         dv_map_entry): the broadcast ships only path/offset/size metadata
         and executors fetch + decode the sidecar bytes themselves — a
@@ -4253,7 +4237,7 @@ class DeltaTable:
         from delta_lake_validation_spark.sources.dv import dv_map_entry
 
         out: dict[str, object] = {}
-        for p, a in snap.files.items():
+        for p, a in entries.items():
             d = a.get("deletionVector")
             if d and int(d.get("cardinality") or 0) != 0:
                 out[strip_scheme(self._abs(p))] = dv_map_entry(
@@ -4303,32 +4287,31 @@ class DeltaTable:
         return f"{self.location}/{unquote(path)}"
 
     def _hive_layout(
-        self, snap: DeltaSnapshot, part_names: list[str] | None = None
+        self, entries: dict[str, dict], part_names: list[str], base: str = ""
     ) -> bool:
-        """True when every live file's directory encodes exactly its
-        partitionValues Hive-style, so partition discovery is safe.
-        ``part_names`` are the on-disk (physical) partition column names."""
-        if part_names is None:
-            part_names = [snap.phys(c) for c in snap.partition_columns]
+        """True when every entry's file sits under ``<table>/<base>/`` in
+        directories that encode exactly its partitionValues Hive-style, so
+        partition discovery from that base is safe.  ``part_names`` are the
+        on-disk (physical) partition column names."""
         root = strip_scheme(self.location).rstrip("/") + "/"
-        for p, a in snap.files.items():
-            if (p.startswith("/") or "://" in p) and not strip_scheme(
-                p
-            ).startswith(root):
-                # external file (shallow clone): partition discovery with
-                # this table's basePath cannot see its hive dirs
+        prefix = f"{base}/" if base else ""
+        for p, a in entries.items():
+            if p.startswith("/") or "://" in p:
+                if not strip_scheme(p).startswith(root):
+                    # external file (shallow clone): partition discovery
+                    # with this table's basePath cannot see its hive dirs
+                    return False
+                p = strip_scheme(p)[len(root):]
+            if not p.startswith(prefix):
                 return False
             pv = a.get("partitionValues") or {}
-            rel = urlparse(p).path if "://" in p else p
-            dirs = rel.split("/")[:-1]
             seen = {}
-            for d in dirs:
+            for d in p[len(prefix):].split("/")[:-1]:
                 if "=" in d:
                     k, _, v = d.partition("=")
                     seen[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-            for c in part_names:
-                if c not in seen or seen[c] != pv.get(c):
-                    return False
+            if any(c not in seen or seen[c] != pv.get(c) for c in part_names):
+                return False
         return True
 
     @staticmethod
@@ -4706,56 +4689,41 @@ class DeltaTable:
         if end_version is None:
             end_version = self.latest_version()
         snap = self.snapshot(end_version)
+        commits = {
+            v: self._commit_actions(v)
+            for v in range(start_version, end_version + 1)
+        }
         # change/data files speak physical names (column mapping); logical
         # names are restored in the final select.  The id-mode guard must
         # cover every file the range REFERENCES (adds, removes, cdc) — a
         # foreign-named file added then removed inside the range is absent
         # from the end snapshot but still read here.
         if snap.mapping_mode == "id":
-            referenced: set[str] = set()
-            for v in range(start_version, end_version + 1):
-                for a in self._commit_actions(v):
-                    for kind in ("add", "remove", "cdc"):
-                        if kind in a and a[kind].get("path"):
-                            referenced.add(a[kind]["path"])
+            referenced = {
+                a[kind]["path"]
+                for actions in commits.values()
+                for a in actions
+                for kind in ("add", "remove", "cdc")
+                if kind in a and a[kind].get("path")
+            }
             self._verify_footer_paths(sorted(referenced), snap)
         phys_schema = snap.physical_schema()
-        phys_parts = [snap.phys(c) for c in snap.partition_columns]
-        data_schema = StructType(
-            [f for f in phys_schema.fields if f.name not in phys_parts]
-        )
-        cdc_schema = StructType(list(data_schema.fields)).add("_change_type", "string")
+        cdc_schema = StructType(list(phys_schema.fields)).add("_change_type", "string")
 
-        def _with_parts(df: DataFrame, pv: dict) -> DataFrame:
-            for c in snap.partition_columns:
-                typ = snap.schema[c].dataType
-                raw = pv.get(snap.phys(c))
-                df = df.withColumn(
-                    snap.phys(c),
-                    F.lit(raw).cast(typ) if raw is not None else F.lit(None).cast(typ),
-                )
-            return df
+        def files(actions: list[dict], kind: str) -> dict[str, dict]:
+            return {
+                a[kind]["path"]: a[kind]
+                for a in actions
+                if kind in a and (kind == "cdc" or a[kind].get("dataChange", True))
+            }
 
         pieces: list[DataFrame] = []
-        for v in range(start_version, end_version + 1):
-            actions = self._commit_actions(v)
-            cdc = [a["cdc"] for a in actions if "cdc" in a]
-            adds = [
-                a["add"] for a in actions
-                if "add" in a and a["add"].get("dataChange", True)
-            ]
-            removes = [
-                a["remove"] for a in actions
-                if "remove" in a and a["remove"].get("dataChange", True)
-            ]
-            ts_ms = self._commit_ts_ms(v) or 0
-            vparts: list[DataFrame] = []
+        for v, actions in commits.items():
+            cdc = files(actions, "cdc")
+            adds = files(actions, "add")
+            removes = files(actions, "remove")
             if cdc:
-                for c in cdc:
-                    df = self.spark.read.schema(cdc_schema).parquet(
-                        self._abs(c["path"])
-                    )
-                    vparts.append(_with_parts(df, c.get("partitionValues") or {}))
+                vparts = [self._scan_files(snap, cdc, cdc_schema, "_change_data")]
             elif adds and removes:
                 # a DV-rewriting DELETE/RESTORE re-adds the same file with a
                 # different deletion vector; its row-level changes are
@@ -4769,96 +4737,58 @@ class DeltaTable:
                     serialize_bitmap,
                 )
 
-                r_by_path = {r["path"]: r for r in removes}
-                same_path = [
-                    (a, r_by_path.get(a["path"]))
-                    for a in adds
-                    if a["path"] in r_by_path
-                ]
-                if len(same_path) != len(adds) or len(adds) != len(removes):
+                if adds.keys() != removes.keys():
                     raise DeltaProtocolError(
                         f"commit {v} rewrites files without cdc actions: its "
                         "row-level changes were never recorded (CDF not "
                         "enabled at write time)"
                     )
-                for a, r in same_path:
+                diffs: dict[str, dict[str, bytes]] = {"delete": {}, "insert": {}}
+                for path, a in adds.items():
                     new_idx = self._dv_indices(a)
-                    old_idx = self._dv_indices(r)
-                    apath = self._abs(a["path"])
-                    for idxs, kind in (
-                        (np.setdiff1d(new_idx, old_idx), "delete"),
-                        (np.setdiff1d(old_idx, new_idx), "insert"),
+                    old_idx = self._dv_indices(removes[path])
+                    for kind, idxs in (
+                        ("delete", np.setdiff1d(new_idx, old_idx)),
+                        ("insert", np.setdiff1d(old_idx, new_idx)),
                     ):
-                        if idxs.size == 0:
-                            continue
-                        df = self._dv_filter(
-                            self.spark.read.schema(data_schema).parquet(apath),
-                            {strip_scheme(apath): serialize_bitmap(idxs)},
-                            keep_member=True,
-                        )
-                        vparts.append(
-                            _with_parts(
-                                df, a.get("partitionValues") or {}
-                            ).withColumn("_change_type", F.lit(kind))
-                        )
+                        if idxs.size:
+                            diffs[kind][path] = serialize_bitmap(idxs)
+                vparts = [
+                    self._scan_files(
+                        snap,
+                        {path: adds[path] for path in bitmaps},
+                        phys_schema,
+                        dv_map={
+                            strip_scheme(self._abs(path)): b
+                            for path, b in bitmaps.items()
+                        },
+                        keep_member=True,
+                    ).withColumn("_change_type", F.lit(kind))
+                    for kind, bitmaps in diffs.items()
+                    if bitmaps
+                ]
             else:
-                for a in adds:
-                    df = self.spark.read.schema(data_schema).parquet(
-                        self._abs(a["path"])
+                # an add-only commit inserts its files' live rows; a
+                # remove-only one (whole-file delete) deletes them
+                vparts = [
+                    self._scan_files(snap, entries, phys_schema).withColumn(
+                        "_change_type", F.lit(kind)
                     )
-                    if a.get("deletionVector"):
-                        # a file added WITH a DV contributes only its live rows
-                        df = self._dv_filter(
-                            df,
-                            {
-                                strip_scheme(self._abs(a["path"])): (
-                                    self._dv_blob(a)
-                                )
-                            },
-                        )
-                    vparts.append(
-                        _with_parts(df, a.get("partitionValues") or {}).withColumn(
-                            "_change_type", F.lit("insert")
-                        )
-                    )
-                for r in removes:
-                    df = self.spark.read.schema(data_schema).parquet(
-                        self._abs(r["path"])
-                    )
-                    if r.get("deletionVector"):
-                        # rows deleted by dropping the file = its live rows
-                        df = self._dv_filter(
-                            df,
-                            {
-                                strip_scheme(self._abs(r["path"])): (
-                                    self._dv_blob(r)
-                                )
-                            },
-                        )
-                    vparts.append(
-                        _with_parts(df, r.get("partitionValues") or {}).withColumn(
-                            "_change_type", F.lit("delete")
-                        )
-                    )
-            for df in vparts:
-                pieces.append(
-                    df.withColumn("_commit_version", F.lit(v).cast("long"))
-                    .withColumn(
-                        "_commit_timestamp",
-                        F.timestamp_millis(F.lit(ts_ms)),
-                    )
-                    .select(
-                        *[
-                            F.col(snap.phys(f.name))
-                            .cast(f.dataType)
-                            .alias(f.name)
-                            for f in snap.schema.fields
-                        ],
-                        "_change_type",
-                        "_commit_version",
-                        "_commit_timestamp",
-                    )
+                    for kind, entries in (("insert", adds), ("delete", removes))
+                    if entries
+                ]
+            if not vparts:
+                continue
+            ts_ms = self._commit_ts_ms(v, actions) or 0
+            pieces += [
+                df.select(
+                    *self._logical_cols(snap),
+                    "_change_type",
+                    F.lit(v).cast("long").alias("_commit_version"),
+                    F.timestamp_millis(F.lit(ts_ms)).alias("_commit_timestamp"),
                 )
+                for df in vparts
+            ]
         if not pieces:
             empty = StructType(list(snap.schema.fields)).add("_change_type", "string")
             return (
@@ -4866,10 +4796,7 @@ class DeltaTable:
                 .withColumn("_commit_version", F.lit(None).cast("long"))
                 .withColumn("_commit_timestamp", F.lit(None).cast("timestamp"))
             )
-        out = pieces[0]
-        for p in pieces[1:]:
-            out = out.unionByName(p)
-        return out
+        return functools.reduce(DataFrame.unionByName, pieces)
 
     # ------------------------------------------------------------- metadata
     def schema(self, version: int | None = None) -> StructType:
@@ -4918,7 +4845,7 @@ def read_delta(
     timestamp: str | None = None,
 ) -> DataFrame:
     """Read a real Delta Lake table (its ``_delta_log``), optionally time
-    travelling.  The write path stays on the engine's own ACID layer."""
+    travelling."""
     return DeltaTable(spark, location).read(version=version, timestamp=timestamp)
 
 
@@ -5492,7 +5419,9 @@ def import_delta(
             "(physical file schema differs from the logical one); read via "
             "read_delta and write a fresh ACID table instead"
         )
-    if snap.partition_columns and not src._hive_layout(snap):
+    if snap.partition_columns and not src._hive_layout(
+        snap.files, [snap.phys(c) for c in snap.partition_columns]
+    ):
         raise AcidTableError(
             "import_delta requires Hive partition layout for partitioned "
             "sources (partition discovery recovers the partition columns); "

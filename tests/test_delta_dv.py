@@ -356,7 +356,7 @@ def test_dv_read_ships_descriptors_not_driver_bytes(spark, tmp_path):
         t.fs.read_bytes = orig
     assert [p for p in reads if "deletion_vector_" in p] == []
     # the broadcast map itself holds descriptor entries, not blobs
-    m = t._dv_map(t.snapshot())
+    m = t._dv_map(t.snapshot().files)
     assert m
     assert all(isinstance(v, dict) and "desc" in v for v in m.values())
 
@@ -386,7 +386,7 @@ def test_dv_driver_fallback_when_pyarrow_cannot_fetch(
     entries — correctness preserved at the old cost."""
     monkeypatch.setattr(dvmod, "_executors_can_fetch", lambda loc: False)
     t = DeltaTable(spark, str(_dv_table(spark, tmp_path)))
-    m = t._dv_map(t.snapshot())
+    m = t._dv_map(t.snapshot().files)
     assert m
     # inline descriptors stay descriptors (no fetch needed); on-disk DVs
     # fall back to driver-loaded bytes
