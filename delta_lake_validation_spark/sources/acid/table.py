@@ -668,22 +668,27 @@ class AcidTable:
         if snap.partition_columns:
             writer = writer.partitionBy(*snap.partition_columns)
         from delta_lake_validation_spark.sources.delta_log import (
-            _unshredded_variant_write,
+            _staging_write_conf,
+        )
+        from delta_lake_validation_spark.sources.footer_stats import (
+            staged_file_stats,
         )
 
-        with _unshredded_variant_write(self.spark, schema):
+        with _staging_write_conf(self.spark):
             writer.parquet(staging)
 
-        # Per-file statistics computed EXECUTOR-side: one distributed
-        # aggregation keyed by input_file_name over the staged directory.
-        # A commit staging thousands of files costs one Spark job + one
-        # recursive listing — never a driver-serial footer read per file.
-        stats_by_file = self._staged_stats(staging, schema, snap.partition_columns)
         sizes = {
             strip_scheme(p): sz
             for p, sz in self.fs.list_files_with_size(staging)
             if p.endswith(".parquet")
         }
+        # per-file numRecords and min/max/nullCount of the stat columns,
+        # from the staged footers (sources/footer_stats.py)
+        stats_by_file = staged_file_stats(
+            self.spark,
+            sorted(sizes),
+            self._stat_col_names(schema, snap.partition_columns),
+        )
 
         adds = []
         base = strip_scheme(staging)
@@ -693,8 +698,7 @@ class AcidTable:
             pv = _partition_values(rel_dir)
             new_rel = (rel_dir + "/" if rel_dir else "") + f"{prefix}-{uuid.uuid4().hex}.parquet"
             self.fs.rename(f_abs, f"{self.location}/{new_rel}")
-            staged_rel = f_abs[len(base):].lstrip("/")
-            n_records, st = stats_by_file.get(staged_rel, (0, None))
+            n_records, st = _acid_file_stats(*stats_by_file.get(f_abs, (0, {})))
             adds.append(
                 {
                     "path": new_rel,
@@ -740,126 +744,16 @@ class AcidTable:
             if f.name not in partition_columns and isinstance(f.dataType, stat_types)
         ]
 
-    def _staged_stats(
-        self, staging: str, schema: StructType, partition_columns: list[str]
-    ) -> dict[str, tuple[int, dict | None]]:
-        """staged-file rel path -> (numRecords, stats dict).  Footer-first:
-        the staged files' parquet footers already hold per-row-group
-        count/min/max/null-count for every stat-eligible type this layer
-        records, so the commit path reads KBs of metadata instead of
-        re-scanning every byte it just wrote (guide §6; the scan job was
-        one full extra pass per commit).  A column whose statistics object
-        the writer dropped wholesale (oversized string min/max) is omitted
-        per-column (ADVICE r8); any other surprise — an asymmetric missing
-        stat, an unreadable file, a filesystem pyarrow can't open — falls
-        back to the original Spark-scan path, which remains the semantics
-        reference."""
-        try:
-            return self._staged_stats_footer(staging, schema, partition_columns)
-        except Exception:
-            return self._staged_stats_scan(staging, schema, partition_columns)
-
-    def _staged_stats_footer(
-        self, staging: str, schema: StructType, partition_columns: list[str]
-    ) -> dict[str, tuple[int, dict | None]]:
-        from delta_lake_validation_spark.sources.footer_stats import footer_stats
-
-        stat_cols = self._stat_col_names(schema, partition_columns)
-        paths = [
-            p
-            for p, _ in self.fs.list_files_with_size(staging)
-            if p.endswith(".parquet")
-        ]
-        per_file = footer_stats(paths, self.spark)
-        base = strip_scheme(staging).rstrip("/")
-        out: dict[str, tuple[int, dict | None]] = {}
-        for p, (n, cols) in per_file.items():
-            if n == 0:
-                # 0-row file: no row groups, so no footer entries at all.
-                # The scan path omits it too (no groupBy row), and the
-                # consumer's .get default supplies (0, None) — skip, don't
-                # treat the empty footer as a missing statistic.
-                continue
-            sp = strip_scheme(p)
-            rel = sp[len(base):].lstrip("/") if sp.startswith(base) else sp.rsplit("/", 1)[-1]
-            mins, maxs, nulls = {}, {}, {}
-            for c in stat_cols:
-                mn, mx, nc = cols.get(c, (None, None, None))
-                if nc is None:
-                    if mn is None and mx is None:
-                        # writer dropped the column's whole statistics
-                        # object (oversized string min/max — ADVICE r8):
-                        # omit the column; every skipping consumer
-                        # keeps-on-unknown, so stats are weaker only for
-                        # this column instead of the commit reverting to
-                        # a full re-scan of every written byte
-                        continue
-                    # asymmetric surprise (min/max without null-count):
-                    # never record weaker stats silently
-                    raise ValueError(f"no footer null-count for {c} in {p}")
-                nulls[c] = int(nc)
-                if mn is not None:
-                    mins[c] = mn
-                if mx is not None:
-                    maxs[c] = mx
-            st = {"minValues": mins, "maxValues": maxs, "nullCounts": nulls} if mins else None
-            out[rel] = (int(n), st)
-        return out
-
-    def _staged_stats_scan(
-        self, staging: str, schema: StructType, partition_columns: list[str]
-    ) -> dict[str, tuple[int, dict | None]]:
-        """Original one-Spark-job stats pass (groupBy input_file_name over
-        the staged data) — the fallback and semantics reference for
-        ``_staged_stats_footer``."""
-        stat_cols = self._stat_col_names(schema, partition_columns)
-        reader = self.spark.read.schema(schema)
-        if partition_columns:
-            reader = reader.option("basePath", staging)
-        try:
-            staged = reader.parquet(staging)
-        except Exception:
-            return {}
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in stat_cols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-            aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nl_{c}"))
-        rows = (
-            staged.withColumn("__file", F.input_file_name())
-            .groupBy("__file")
-            .agg(*aggs)
-            .collect()
-        )
-        out: dict[str, tuple[int, dict | None]] = {}
-        for r in rows:
-            mins = {c: r[f"__mn_{c}"] for c in stat_cols if r[f"__mn_{c}"] is not None}
-            maxs = {c: r[f"__mx_{c}"] for c in stat_cols if r[f"__mx_{c}"] is not None}
-            nulls = {c: r[f"__nl_{c}"] for c in stat_cols}
-            st = {"minValues": mins, "maxValues": maxs, "nullCounts": nulls} if mins else None
-            # key by the staging-RELATIVE subpath (partition dirs included):
-            # basenames are NOT unique across partition dirs — one task
-            # writes an identically-named part file into every partition it
-            # owns, and a basename key silently assigns one file's stats to
-            # all of them (observed: read_where then skips live rows).
-            # The decoded URI path is scheme/authority-independent, so the
-            # suffix after the staging root is a safe join key everywhere.
-            p = unquote(urlparse(r["__file"]).path)
-            base = strip_scheme(staging).rstrip("/")
-            rel = p[len(base):].lstrip("/") if p.startswith(base) else p.rsplit("/", 1)[-1]
-            out[rel] = (r["__n"], st)
-        return out
-
     def _cdf_enabled(self, snap: Snapshot) -> bool:
         return snap.properties.get("enableChangeDataFeed", "false").lower() == "true"
 
     def _write_cdf(self, df_with_type: DataFrame) -> list[str]:
         from delta_lake_validation_spark.sources.delta_log import (
-            _unshredded_variant_write,
+            _staging_write_conf,
         )
 
         out_dir = f"{self.location}/{CDF_DIR}/{uuid.uuid4().hex}"
-        with _unshredded_variant_write(self.spark, df_with_type.schema):
+        with _staging_write_conf(self.spark):
             df_with_type.write.mode("overwrite").parquet(out_dir)
         out = []
         for p, size in self.fs.list_files_with_size(out_dir):
@@ -1942,6 +1836,20 @@ class AcidTable:
         for p in pieces[1:]:
             out = out.unionByName(p)
         return out
+
+
+def _acid_file_stats(n: int, cols: dict[str, tuple]) -> tuple[int, dict | None]:
+    """An add entry's ``(numRecords, stats)`` from ``(numRecords,
+    {column: (min, max, nullCount)})`` (sources/footer_stats.py); stats
+    are ``None`` when no column has a min."""
+    mins = {c: mn for c, (mn, _mx, _nc) in cols.items() if mn is not None}
+    if not mins:
+        return n, None
+    return n, {
+        "minValues": mins,
+        "maxValues": {c: mx for c, (_mn, mx, _nc) in cols.items() if mx is not None},
+        "nullCounts": {c: nc for c, (_mn, _mx, nc) in cols.items()},
+    }
 
 
 def _partition_values(rel_dir: str) -> dict[str, str]:

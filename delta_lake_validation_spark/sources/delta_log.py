@@ -46,12 +46,29 @@ import functools
 import json
 import os
 import re
+import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ByteType,
+    DateType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructType,
+    TimestampType,
+)
 
-from delta_lake_validation_spark.sources.fs import FileSystem, is_local, strip_scheme
+from delta_lake_validation_spark.sources.fs import (
+    FileSystem,
+    is_local,
+    pa_fs,
+    strip_scheme,
+)
 
 
 class DeltaProtocolError(RuntimeError):
@@ -139,15 +156,20 @@ def _interval_ms(text: str | None, default: int) -> int:
 
 
 def _stat_jsonable(v):
-    """Collected min/max -> the Delta stats JSON spelling (timestamps and
-    dates as ISO strings, non-finite floats dropped — JSON can't carry
-    them and a missing stat only costs pruning, never correctness)."""
+    """A footer/scan min or max -> the Delta stats JSON spelling.  Dates
+    and timestamps become ISO strings: a UTC-aware datetime (a
+    ``TIMESTAMP`` bound) renders its UTC wall clock, a naive one (a
+    ``TIMESTAMP_NTZ`` bound) renders as is.  Non-finite floats and
+    undecoded physical bytes are dropped: JSON can't carry them, and a
+    missing stat only costs pruning, never correctness."""
     import datetime as _dt
     import math
 
     if v is None:
         return None
     if isinstance(v, float) and not math.isfinite(v):
+        return None
+    if isinstance(v, (bytes, bytearray)):
         return None
     if isinstance(v, _dt.datetime):
         return v.strftime("%Y-%m-%dT%H:%M:%S.%f") + "Z"
@@ -156,17 +178,32 @@ def _stat_jsonable(v):
     return v
 
 
-def _pa_fs(path: str):
-    """(pyarrow FileSystem, fs-relative path) for any URI pyarrow can
-    mount (file://, s3://, gs://, hdfs://); plain paths map to local.
-    Used only when the table handle has no SparkSession (Python Data
-    Source planning workers)."""
-    import pyarrow.fs as pafs
+#: column types whose min/max/nullCount an add entry records
+_STAT_TYPES = (
+    ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType,
+    StringType, DateType, TimestampType,
+)
 
-    if is_local(path):
-        return pafs.LocalFileSystem(), strip_scheme(path)
-    fs, norm = pafs.FileSystem.from_uri(path)
-    return fs, norm
+
+def _delta_file_stats(n: int, cols: dict[str, tuple]) -> dict:
+    """An add entry's stats object from ``(numRecords, {column: (min,
+    max, nullCount)})`` (sources/footer_stats.py).  A ``None`` null count
+    (a foreign footer that lacks one) is left out."""
+    mins, maxs, nulls = {}, {}, {}
+    for c, (mn, mx, nc) in cols.items():
+        lo, hi = _stat_jsonable(mn), _stat_jsonable(mx)
+        if lo is not None:
+            mins[c] = lo
+        if hi is not None:
+            maxs[c] = hi
+        if nc is not None:
+            nulls[c] = int(nc)
+    return {
+        "numRecords": int(n),
+        "minValues": mins,
+        "maxValues": maxs,
+        "nullCount": nulls,
+    }
 
 
 def _map_field_paths(schema, prefix=()) -> list[tuple[str, ...]]:
@@ -416,32 +453,49 @@ def _with_parquet_field_ids(dt):
 import contextlib as _contextlib  # noqa: E402
 
 
+#: session confs every staged parquet write runs under.  Variant columns
+#: are written UNSHREDDED: Spark 4.1 shreds them by default (the variant
+#: binary moves into typed_value subtrees, a JVM-scan pushdown the
+#: pyarrow scan leg, deltapy, cannot reassemble), and both scan paths
+#: must serve every file the engine writes; foreign shredded files refuse
+#: with a typed diagnosis (pydatasource._SHREDDED_MSG).  Timestamps are
+#: written as INT64 microseconds, not Spark's default INT96, because INT96
+#: has no footer statistics (sources/footer_stats.py).
+_STAGING_CONF = {
+    "spark.sql.variant.writeShredding.enabled": "false",
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+}
+_staging_lock = threading.Lock()
+#: id(session) -> [writers inside the scope, the confs it replaced]
+_staging_users: dict[int, list] = {}
+
+
 @_contextlib.contextmanager
-def _unshredded_variant_write(spark, schema):
-    """Stage variant parquet UNSHREDDED.  Spark 4.1 shreds variant
-    columns on write by default (spark.sql.variant.writeShredding.enabled
-    + inferShreddingSchema): the variant binary moves into typed_value
-    subtrees — a JVM-scan pushdown optimization the engine's pyarrow scan
-    leg (deltapy) cannot reassemble.  The engine trades that pushdown for
-    leg parity: both scan paths must serve every file the engine writes.
-    Foreign shredded files refuse with a typed diagnosis
-    (pydatasource._SHREDDED_MSG).  No-op when the schema has no variant
-    or the Spark build predates shredding."""
-    if not _schema_has_variant(schema):
-        yield
-        return
-    key = "spark.sql.variant.writeShredding.enabled"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None  # pre-shredding Spark: nothing to disable
-    if old is not None:
-        spark.conf.set(key, "false")
+def _staging_write_conf(spark):
+    """Run a staged parquet write under ``_STAGING_CONF``.  The confs are
+    session-wide, so concurrent writers on one session share one scope:
+    the first to enter sets them, the last to leave restores the old
+    values.  A key this Spark build does not know is left alone."""
+    key = id(spark)
+    with _staging_lock:
+        users = _staging_users.setdefault(key, [0, {}])
+        if users[0] == 0:
+            for k, v in _STAGING_CONF.items():
+                try:
+                    users[1][k] = spark.conf.get(k)
+                except Exception:
+                    continue
+                spark.conf.set(k, v)
+        users[0] += 1
     try:
         yield
     finally:
-        if old is not None:
-            spark.conf.set(key, old)
+        with _staging_lock:
+            users[0] -= 1
+            if users[0] == 0:
+                del _staging_users[key]
+                for k, old in users[1].items():
+                    spark.conf.set(k, old)
 
 
 def clustering_columns(snap: DeltaSnapshot) -> list[str]:
@@ -511,7 +565,7 @@ class DeltaTable:
         if self.spark is None:
             import pyarrow.fs as pafs
 
-            fs, norm = _pa_fs(self.log_dir)
+            fs, norm = pa_fs(self.log_dir)
             sel = pafs.FileSelector(norm, allow_not_found=True)
             return sorted(
                 info.path.rsplit("/", 1)[-1]
@@ -544,7 +598,7 @@ class DeltaTable:
             with open(strip_scheme(path), encoding="utf-8") as f:
                 return f.read()
         if self.spark is None:
-            fs, norm = _pa_fs(path)
+            fs, norm = pa_fs(path)
             with fs.open_input_stream(norm) as stream:
                 return stream.read().decode("utf-8")
         # small control file: route through the JVM FS
@@ -610,7 +664,7 @@ class DeltaTable:
 
         out: list[dict] = []
         for p in paths:
-            fs, norm = _pa_fs(p)
+            fs, norm = pa_fs(p)
             t = pq.read_table(norm, filesystem=fs)
             cols = [c for c in wanted if c in t.schema.names]
             t = t.select(cols)
@@ -838,7 +892,7 @@ class DeltaTable:
         if is_local(path):
             return int(os.path.getmtime(strip_scheme(path)) * 1000)
         if self.spark is None:
-            fs, norm = _pa_fs(path)
+            fs, norm = pa_fs(path)
             mtime = fs.get_file_info(norm).mtime
             return int(mtime.timestamp() * 1000)
         fs, jpath = self.fs._jfs(path)
@@ -1585,7 +1639,7 @@ class DeltaTable:
         writer = df.select(*out_cols).write.mode("overwrite")
         if phys_parts:
             writer = writer.partitionBy(*phys_parts)
-        with _unshredded_variant_write(self.spark, snap.schema):
+        with _staging_write_conf(self.spark):
             writer.parquet(staging)
 
         sizes = {
@@ -1603,42 +1657,21 @@ class DeltaTable:
         except Exception:
             self.fs.delete(staging, recursive=True)
             raise
-        # per-file stats keyed by the FULL staged path: basenames
-        # collide across partition dirs (Spark names one task's file
-        # identically in every partition dir it writes).  input_file_name
-        # returns a percent-encoded URI while the listing is raw on-disk —
-        # decode once, or special-char partition dirs get numRecords 0.
-        # One scan computes numRecords AND per-column min/max/nullCount
-        # (comparable atomic types only) — the data-skipping stats every
-        # Delta writer records, feeding read_where and the deltapy
-        # data source's file pruning.
-        from urllib.parse import unquote as _unq
-
-        from pyspark.sql.types import (
-            ByteType,
-            DateType,
-            DoubleType,
-            FloatType,
-            IntegerType,
-            LongType,
-            ShortType,
-            StringType,
-            TimestampType,
+        from delta_lake_validation_spark.sources.acid.table import (
+            _partition_values,
+        )
+        from delta_lake_validation_spark.sources.footer_stats import (
+            staged_file_stats,
         )
 
-        _STAT_TYPES = (
-            ByteType,
-            ShortType,
-            IntegerType,
-            LongType,
-            FloatType,
-            DoubleType,
-            StringType,
-            DateType,
-            TimestampType,
-        )
+        # numRecords and per-column min/max/nullCount per staged file
+        # (comparable atomic types only): the data-skipping stats every
+        # Delta writer records, feeding read_where and the deltapy data
+        # source's file pruning.  Read from the staged footers
+        # (sources/footer_stats.py), keyed by the FULL staged path:
+        # basenames collide across partition dirs.
         stat_cols = [
-            f.name
+            snap.phys(f.name)
             for f in snap.schema.fields
             # collated columns: our min/max would be binary-ordered while
             # the column's collation orders differently — never stat them
@@ -1646,60 +1679,7 @@ class DeltaTable:
             and snap.phys(f.name) not in phys_parts
             and isinstance(f.dataType, _STAT_TYPES)
         ]
-        # Footer-first (guide §6): the staged parquet footers already carry
-        # per-row-group count/min/max/null-count with the exact orderings
-        # the Spark-scan path computed, so the commit reads KBs of metadata
-        # instead of re-scanning every byte it just wrote.  Timestamp stat
-        # columns stay on the scan path (Spark stages them as INT96, which
-        # has no footer statistics); so does any surprise (missing footer
-        # stat, unreadable file) — the scan remains the semantics reference.
-        stats_by_file: dict[str, dict] = {}
-        _footer_ok = False
-        if not any(
-            isinstance(f.dataType, TimestampType)
-            for f in snap.schema.fields
-            if f.name in stat_cols
-        ):
-            try:
-                stats_by_file = self._staged_stats_footer(
-                    sorted(sizes), [snap.phys(c) for c in stat_cols]
-                )
-                _footer_ok = True
-            except Exception:
-                stats_by_file = {}
-        if not _footer_ok:
-            aggs = [F.count(F.lit(1)).alias("n")]
-            for i, c in enumerate(stat_cols):
-                pc = snap.phys(c)
-                aggs.append(F.min(F.col(pc)).alias(f"mn{i}"))
-                aggs.append(F.max(F.col(pc)).alias(f"mx{i}"))
-                aggs.append(
-                    F.sum(F.col(pc).isNull().cast("long")).alias(f"nc{i}")
-                )
-            for r in (
-                self.spark.read.parquet(staging)
-                .groupBy(F.input_file_name().alias("f"))
-                .agg(*aggs)
-                .collect()
-            ):
-                mins, maxs, nulls = {}, {}, {}
-                for i, c in enumerate(stat_cols):
-                    pc = snap.phys(c)
-                    lo, hi = _stat_jsonable(r[f"mn{i}"]), _stat_jsonable(r[f"mx{i}"])
-                    if lo is not None:
-                        mins[pc] = lo
-                    if hi is not None:
-                        maxs[pc] = hi
-                    nulls[pc] = int(r[f"nc{i}"] or 0)
-                stats_by_file[strip_scheme(_unq(r["f"]))] = {
-                    "numRecords": int(r["n"]),
-                    "minValues": mins,
-                    "maxValues": maxs,
-                    "nullCount": nulls,
-                }
-        from delta_lake_validation_spark.sources.acid.table import (
-            _partition_values,
-        )
+        stats_by_file = staged_file_stats(self.spark, sorted(sizes), stat_cols)
 
         adds: list[dict] = []
         base = strip_scheme(staging)
@@ -1725,58 +1705,14 @@ class DeltaTable:
                     "modificationTime": now_ms,
                     "dataChange": True,
                     "stats": json.dumps(
-                        stats_by_file.get(f_abs, {"numRecords": 0})
+                        _delta_file_stats(*stats_by_file[f_abs])
+                        if f_abs in stats_by_file
+                        else {"numRecords": 0}
                     ),
                 }
             )
         self.fs.delete(staging, recursive=True)
         return adds
-
-    def _staged_stats_footer(
-        self, paths: list[str], phys_stat_cols: list[str]
-    ) -> dict[str, dict]:
-        """Delta-shaped per-file stats from parquet footers (see
-        sources/footer_stats.py for the equivalence argument).  A column
-        whose statistics object was dropped wholesale by the writer
-        (oversized string min/max) is omitted per-column; raises only on
-        the asymmetric surprise (min/max present, null-count missing) —
-        the caller then falls back to the scan, so stats are never
-        silently weaker than the footer actually carries."""
-        from delta_lake_validation_spark.sources.footer_stats import (
-            footer_stats,
-        )
-
-        out: dict[str, dict] = {}
-        for p, (n, cols) in footer_stats(paths, self.spark).items():
-            if n == 0:
-                # 0-row file: no row groups, no footer entries.  The scan
-                # path omits it too; the consumer's .get default supplies
-                # {"numRecords": 0} — skip rather than raise.
-                continue
-            mins, maxs, nulls = {}, {}, {}
-            for pc in phys_stat_cols:
-                mn, mx, nc = cols.get(pc, (None, None, None))
-                if nc is None:
-                    if mn is None and mx is None:
-                        # dropped statistics object (oversized string
-                        # min/max — ADVICE r8): omit the column rather
-                        # than reverting the whole commit to the scan;
-                        # skipping consumers keep-on-unknown
-                        continue
-                    raise ValueError(f"no footer null-count for {pc} in {p}")
-                nulls[pc] = int(nc)
-                lo, hi = _stat_jsonable(mn), _stat_jsonable(mx)
-                if lo is not None:
-                    mins[pc] = lo
-                if hi is not None:
-                    maxs[pc] = hi
-            out[strip_scheme(p)] = {
-                "numRecords": int(n),
-                "minValues": mins,
-                "maxValues": maxs,
-                "nullCount": nulls,
-            }
-        return out
 
     #: write a classic checkpoint every N successful commits (delta-spark's
     #: own cadence) so long-lived tables replay one columnar file + a short
@@ -1955,13 +1891,9 @@ class DeltaTable:
         """Row count of a data file from its parquet footer only (no data
         read) — the fallback when an add carries no numRecords stats and
         row tracking must still assign a collision-free baseRowId."""
-        import pyarrow.parquet as pq
+        from delta_lake_validation_spark.sources.footer_stats import read_footer
 
-        from delta_lake_validation_spark.sources.fs import pa_fs
-
-        fs, norm = pa_fs(self._abs(rel_path))
-        with fs.open_input_file(norm) as fh:
-            return int(pq.ParquetFile(fh).metadata.num_rows)
+        return int(read_footer(self._abs(rel_path)).num_rows)
 
     # ------------------------------------------------------------------
     # Row tracking: preserved ids on rewrites (PROTOCOL.md "Row Tracking").
@@ -3011,7 +2943,7 @@ class DeltaTable:
         writer = df_logical.select(*out_cols).write.mode("overwrite")
         if phys_parts:
             writer = writer.partitionBy(*phys_parts)
-        with _unshredded_variant_write(self.spark, snap.schema):
+        with _staging_write_conf(self.spark):
             writer.parquet(staging)
         from delta_lake_validation_spark.sources.acid.table import (
             _partition_values,
@@ -5868,40 +5800,24 @@ def convert_to_delta(
     data_fields = [f for f in data_df.schema.fields if f.name not in part_names]
     schema = StructType(data_fields + part_fields)
 
-    # distributed footer sweep: numRecords + rg-aggregated min/max/nulls
+    # distributed footer sweep: numRecords + rg-merged min/max/nulls of the
+    # top-level data columns, and each file's schema fingerprint
     sc = spark.sparkContext
     loc_b = location
+    data_names = {f.name for f in data_fields}
 
     def _footer(rel: str):
-        import pyarrow.parquet as _pq
+        from delta_lake_validation_spark.sources.footer_stats import (
+            file_footer_stats,
+            read_footer,
+        )
 
-        from delta_lake_validation_spark.sources.delta_log import _pa_fs
-
-        pafs, norm = _pa_fs(f"{loc_b}/{rel}")
-        with pafs.open_input_file(norm) as fh:
-            md = _pq.ParquetFile(fh).metadata
+        md = read_footer(f"{loc_b}/{rel}")
         # first line of the str() form is an object repr with a memory
         # address — drop it, keep the stable schema text
         sch_fp = "\n".join(str(md.schema).splitlines()[1:])
-        names = list(md.schema.names)
-        mins: dict = {}
-        maxs: dict = {}
-        nulls: dict = {}
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            for i, col in enumerate(names):
-                st = rg.column(i).statistics
-                if st is None:
-                    continue
-                if st.null_count is not None:
-                    nulls[col] = nulls.get(col, 0) + st.null_count
-                if st.has_min_max:
-                    lo, hi = st.min, st.max
-                    if isinstance(lo, bytes):
-                        continue  # undecoded physical bytes: skip, never wrong
-                    mins[col] = lo if col not in mins else min(mins[col], lo)
-                    maxs[col] = hi if col not in maxs else max(maxs[col], hi)
-        return rel, md.num_rows, mins, maxs, nulls, sch_fp
+        n, cols = file_footer_stats(md)
+        return rel, n, {c: v for c, v in cols.items() if c in data_names}, sch_fp
 
     swept = sc.parallelize(
         [rel for rel, _ in inventory],
@@ -5914,7 +5830,7 @@ def convert_to_delta(
             f"({len(fingerprints)} distinct footers); CONVERT refuses to "
             "guess a merge — normalize the files first"
         )
-    footers = {rel: (n, mins, maxs, nulls) for rel, n, mins, maxs, nulls, _ in swept}
+    footers = {rel: (n, cols) for rel, n, cols, _ in swept}
 
     props = dict(properties or {})
     now = int(_time.time() * 1000)
@@ -5945,7 +5861,6 @@ def convert_to_delta(
     ]
     for rel, sz in sorted(inventory):
         pv = _partition_values(rel.rsplit("/", 1)[0] if "/" in rel else "")
-        n, mins, maxs, nulls = footers[rel]
         actions.append(
             {
                 "add": {
@@ -5954,20 +5869,7 @@ def convert_to_delta(
                     "size": sz,
                     "modificationTime": now,
                     "dataChange": True,
-                    "stats": json.dumps(
-                        {
-                            "numRecords": int(n),
-                            "minValues": {
-                                k: _stat_jsonable(v) for k, v in mins.items()
-                                if _stat_jsonable(v) is not None
-                            },
-                            "maxValues": {
-                                k: _stat_jsonable(v) for k, v in maxs.items()
-                                if _stat_jsonable(v) is not None
-                            },
-                            "nullCount": {k: int(v) for k, v in nulls.items()},
-                        }
-                    ),
+                    "stats": json.dumps(_delta_file_stats(*footers[rel])),
                 }
             }
         )

@@ -1,41 +1,33 @@
-"""Per-file parquet statistics from footers instead of a data re-scan.
+"""Per-file statistics of freshly written parquet, footer first.
 
-Every ACID/Delta commit records per-file ``(numRecords, min/max,
-nullCount)`` in its add entries.  The original implementation re-read
-the just-written staging directory in a second Spark job
-(``groupBy(input_file_name)``) — a full pass over every byte the commit
-just wrote, per commit.  Parquet footers already carry exactly these
-statistics per row group, so this module derives the same values from
-metadata only: a few KB per file instead of the file itself.  Guide §6
-(I/O): at 100 TB the commit path stops re-reading its own output
-entirely.  Caveat (ADVICE r8): for a string/binary column whose min+max
-exceed the writer's statistics-size threshold (4096 bytes in
-parquet-cpp/parquet-mr) the writer drops that column's WHOLE statistics
-object — no min/max and no null_count — so such a column surfaces here
-as (None, None, None) and callers must tolerate it per-column (omit the
-column from the recorded stats; data skipping keeps-on-unknown) rather
-than failing the whole commit back to the scan.
+Every Delta/ACID commit records ``(numRecords, min/max, nullCount)`` for
+each file it adds, and CONVERT TO DELTA for each file it adopts; this
+module is the one place that derives them.  :func:`staged_file_stats`
+reads them from the parquet footers (a few KB per file, not a re-scan of
+what the commit just wrote) and falls back to one
+``groupBy(input_file_name)`` scan, :func:`staged_stats_from_scan`, only
+where the footers cannot answer.  That scan is also the reference
+tests/test_footer_stats_r8.py pins the footers against.
 
-Equivalence with the scan (pinned by tests/test_footer_stats_r8.py):
+Footer rules:
 
-- int8..64 / float / double / string / boolean / date columns: parquet
-  column-chunk statistics use the same orderings Spark's ``min``/``max``
-  aggregates do — UTF-8 byte order equals codepoint order for strings,
-  and parquet-mr places NaN in double bounds exactly where Spark's
-  min/max do (verified: values ``[1.0, NaN]`` give ``(min 1.0, max
-  NaN)`` on both paths; callers drop non-finite bounds identically).
-- timestamps: Spark writes INT96 (no footer statistics) — callers keep
-  timestamp-bearing schemas on the scan path.
-- a column whose footer lacks a needed statistic surfaces as ``None``;
-  callers OMIT a fully-absent column (min, max and null_count all
-  ``None`` — the dropped-statistics-object case above) and fall back to
-  the scan only for the asymmetric surprise (a null_count missing while
-  min/max are present), so one oversized text column no longer reverts
-  every commit on the table to a full re-scan.
+- a 0-row file has no row groups and is skipped; the scan emits no group
+  for it either.
+- a column whose WHOLE statistics object the writer dropped (a string
+  whose min+max exceed 4096 bytes: no min/max, no null_count) is omitted;
+  data skipping keeps a file whose column has no stats.
+- min/max without a null count raises, so the scan answers instead.
 
-Past ``distributed_threshold`` files the footers are read in a Spark
-job over the path list (metadata-sized rows only), so a commit with
-thousands of files never serializes footer reads on the driver.
+Orderings match Spark's ``min``/``max``: UTF-8 byte order is codepoint
+order, and the row-group merge puts NaN above every number.  Timestamps
+are staged as INT64 microseconds (``delta_log._staging_write_conf``),
+whose bounds pyarrow returns as UTC-aware datetimes, the same instants
+the scan returns; INT96, Spark's default, has no statistics and is
+omitted.
+
+Past ``distributed_threshold`` files the footers are read in a Spark job
+over the path list, so a commit of thousands of files never reads them
+one by one on the driver.
 """
 
 from __future__ import annotations
@@ -74,13 +66,8 @@ def _merge_max(a, b):
     return a if a >= b else b
 
 
-def file_footer_stats(path: str) -> tuple[int, dict[str, tuple]]:
-    """``(num_rows, {column_path: (min, max, null_count)})`` for one
-    parquet file, from its footer only.  A bound is ``None`` when any
-    row group lacks min/max for the column; ``null_count`` is ``None``
-    when any row group lacks it.  Values are pyarrow's logical-type-
-    converted Python values (int/float/str/bool/date), identical to what
-    a Spark ``min``/``max`` collect yields for the supported types.
+def read_footer(path: str):
+    """pyarrow ``FileMetaData`` of one parquet file, footer bytes only.
     Executor-safe: importable module + pyarrow only."""
     import pyarrow.parquet as pq
 
@@ -88,21 +75,28 @@ def file_footer_stats(path: str) -> tuple[int, dict[str, tuple]]:
 
     fs, norm = pa_fs(path)
     try:
-        md = pq.read_metadata(norm, filesystem=fs)
+        return pq.read_metadata(norm, filesystem=fs)
     except OSError:
         # Spark 4.1 annotates variant columns with the parquet VARIANT
-        # LogicalType, which this container's pyarrow cannot parse — the
-        # same footer otherwise carries perfectly good statistics for the
-        # non-variant columns.  Reuse the r7 thrift shim that strips the
-        # annotation (footer_patch.py); statistics bytes are copied
-        # verbatim, so values are identical.  Any other parse failure
-        # re-raises and the caller falls back to the scan.
+        # LogicalType, which this pyarrow cannot parse; footer_patch.py
+        # strips the annotation and copies the statistics verbatim.  Any
+        # other parse failure re-raises.
         from delta_lake_validation_spark.sources.footer_patch import (
             read_patched_metadata,
         )
 
         with fs.open_input_file(norm) as fh:
-            md = read_patched_metadata(fh)
+            return read_patched_metadata(fh)
+
+
+def file_footer_stats(md) -> tuple[int, dict[str, tuple]]:
+    """``(num_rows, {column_path: (min, max, null_count)})`` of one
+    parquet file from its footer ``md`` (:func:`read_footer`).  A bound
+    is ``None`` when any row group lacks min/max for the column or
+    pyarrow cannot convert them; ``null_count`` is ``None`` when any row
+    group lacks it.  Values are pyarrow's logical-type-converted Python
+    values (int/float/str/bool/date, UTC-aware datetime for INT64
+    timestamps)."""
     # [min, max, null_count, every_rg_had_minmax, every_rg_had_nullcount]
     cols: dict[str, list] = {}
     for rg_i in range(md.num_row_groups):
@@ -112,12 +106,19 @@ def file_footer_stats(path: str) -> tuple[int, dict[str, tuple]]:
             st = col.statistics
             has_mm = st is not None and st.has_min_max
             has_nc = st is not None and st.has_null_count
+            if has_mm:
+                try:
+                    lo, hi = st.min, st.max
+                except NotImplementedError:
+                    # pyarrow cannot convert the bounds of some logical
+                    # types (a decimal stored as INT32/INT64): unknown
+                    has_mm = False
             ent = cols.setdefault(col.path_in_schema, [None, None, 0, True, True])
             ent[3] = ent[3] and has_mm
             ent[4] = ent[4] and has_nc
             if has_mm:
-                ent[0] = _merge_min(ent[0], st.min)
-                ent[1] = _merge_max(ent[1], st.max)
+                ent[0] = _merge_min(ent[0], lo)
+                ent[1] = _merge_max(ent[1], hi)
             if has_nc:
                 ent[2] += st.null_count
     return md.num_rows, {
@@ -131,7 +132,7 @@ def file_footer_stats(path: str) -> tuple[int, dict[str, tuple]]:
 
 
 def _kv(path: str):
-    return path, file_footer_stats(path)
+    return path, file_footer_stats(read_footer(path))
 
 
 def footer_stats(
@@ -139,8 +140,8 @@ def footer_stats(
     spark=None,
     distributed_threshold: int = 256,
 ) -> dict[str, tuple[int, dict[str, tuple]]]:
-    """``{path: file_footer_stats(path)}`` for every path.  Small batches
-    read on the driver (sub-ms per local footer); past
+    """``{path: file_footer_stats(read_footer(path))}`` for every path.
+    Small batches read on the driver (sub-ms per local footer); past
     ``distributed_threshold`` the reads fan out as a Spark job over the
     path list so a huge commit's stats collection is executor-parallel
     metadata I/O, never a driver loop."""
@@ -149,4 +150,82 @@ def footer_stats(
         sc = spark.sparkContext
         n_slices = max(1, min(len(plist) // 32, sc.defaultParallelism * 4))
         return dict(sc.parallelize(plist, n_slices).map(_kv).collect())
-    return {p: file_footer_stats(p) for p in plist}
+    return dict(_kv(p) for p in plist)
+
+
+def staged_stats_from_footers(
+    spark, paths: list[str], columns: list[str]
+) -> dict[str, tuple[int, dict[str, tuple]]]:
+    """The footer half of :func:`staged_file_stats`, under the rules in
+    the module docstring.  Raises where the footers cannot answer."""
+    out: dict[str, tuple[int, dict[str, tuple]]] = {}
+    for p, (n, cols) in footer_stats(paths, spark).items():
+        if n == 0:
+            continue
+        got: dict[str, tuple] = {}
+        for c in columns:
+            mn, mx, nc = cols.get(c, (None, None, None))
+            if nc is None:
+                if mn is None and mx is None:
+                    continue  # dropped statistics object: omit the column
+                raise ValueError(f"no footer null-count for {c} in {p}")
+            got[c] = (mn, mx, int(nc))
+        out[p] = (int(n), got)
+    return out
+
+
+def staged_stats_from_scan(
+    spark, paths: list[str], columns: list[str]
+) -> dict[str, tuple[int, dict[str, tuple]]]:
+    """The scan half of :func:`staged_file_stats`: one
+    ``groupBy(input_file_name)`` aggregation over the files.  Timestamps
+    are aggregated as epoch microseconds and returned as UTC-aware
+    datetimes, like the footer's: a collected ``TimestampType`` value is
+    a naive datetime in the driver's local zone."""
+    import datetime as dt
+    from urllib.parse import unquote
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import TimestampType
+
+    from delta_lake_validation_spark.sources.fs import strip_scheme
+
+    df = spark.read.parquet(*paths)
+    ts_cols = {
+        f.name for f in df.schema.fields if isinstance(f.dataType, TimestampType)
+    }
+    aggs = [F.count(F.lit(1))]
+    for c in columns:
+        lo, hi = F.min(F.col(c)), F.max(F.col(c))
+        if c in ts_cols:
+            lo, hi = F.unix_micros(lo), F.unix_micros(hi)
+        aggs += [lo, hi, F.sum(F.col(c).isNull().cast("long"))]
+    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+
+    def bound(c, v):
+        if v is None or c not in ts_cols:
+            return v
+        return epoch + dt.timedelta(microseconds=v)
+
+    # input_file_name is a percent-encoded URI; the listed paths are raw
+    by_key = {strip_scheme(p): p for p in paths}
+    out: dict[str, tuple[int, dict[str, tuple]]] = {}
+    for r in df.groupBy(F.input_file_name()).agg(*aggs).collect():
+        got = {}
+        for i, c in enumerate(columns):
+            mn, mx, nc = r[2 + 3 * i], r[3 + 3 * i], r[4 + 3 * i]
+            got[c] = (bound(c, mn), bound(c, mx), int(nc or 0))
+        out[by_key[strip_scheme(unquote(r[0]))]] = (int(r[1]), got)
+    return out
+
+
+def staged_file_stats(
+    spark, paths: list[str], columns: list[str]
+) -> dict[str, tuple[int, dict[str, tuple]]]:
+    """``{path: (numRecords, {column: (min, max, nullCount)})}`` for
+    freshly written parquet files and their (physical) column names.
+    Footers first; on any failure, the one scan fallback."""
+    try:
+        return staged_stats_from_footers(spark, paths, columns)
+    except Exception:
+        return staged_stats_from_scan(spark, paths, columns)

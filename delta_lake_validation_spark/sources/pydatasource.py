@@ -89,7 +89,6 @@ from delta_lake_validation_spark.sources.delta_log import (
     DeltaProtocolError,
     DeltaSnapshot,
     DeltaTable,
-    _pa_fs,
 )
 from delta_lake_validation_spark.sources.dv import (
     deserialize_bitmap,
@@ -97,7 +96,7 @@ from delta_lake_validation_spark.sources.dv import (
     load_dv_bytes,
     resolve_dv_entry,
 )
-from delta_lake_validation_spark.sources.fs import is_local, strip_scheme
+from delta_lake_validation_spark.sources.fs import is_local, pa_fs, strip_scheme
 
 _DEFAULT_TASK_BYTES = 128 * 1024 * 1024
 
@@ -197,7 +196,7 @@ def _variant_probe(tbl, snap) -> None:
     import pyarrow.parquet as pq
 
     rel = next(iter(snap.files))
-    fs, norm = _pa_fs(tbl._abs(rel))
+    fs, norm = pa_fs(tbl._abs(rel))
     try:
         with fs.open_input_file(norm) as fh:
             pq.ParquetFile(fh).schema_arrow
@@ -700,7 +699,7 @@ class _ScanExec:
 
         self._ensure()
         for fsl in files:
-            fs, norm = _pa_fs(fsl.path)
+            fs, norm = pa_fs(fsl.path)
             with fs.open_input_file(norm) as fh:
                 try:
                     pf = pq.ParquetFile(fh)
@@ -1452,7 +1451,7 @@ class DeltaPyWriter(DataSourceArrowWriter):
                     f"{self._replace_where_text!r}"
                 )
             rel = self._rel_path(pv)
-            fs, norm = _pa_fs(f"{self.path}/{rel}")
+            fs, norm = pa_fs(f"{self.path}/{rel}")
             parent = norm.rsplit("/", 1)[0]
             fs.create_dir(parent, recursive=True)
             pq.write_table(data, norm, filesystem=fs, compression="snappy")
@@ -1739,7 +1738,7 @@ class DeltaPyWriter(DataSourceArrowWriter):
                 continue
             for a in m.adds:
                 try:
-                    fs, norm = _pa_fs(f"{self.path}/{a['path']}")
+                    fs, norm = pa_fs(f"{self.path}/{a['path']}")
                     fs.delete_file(norm)
                 except OSError:
                     pass
@@ -1821,7 +1820,7 @@ def _atomic_create(path: str, content: str) -> None:
         return
     import pyarrow.fs as pafs
 
-    fs, norm = _pa_fs(path)
+    fs, norm = pa_fs(path)
     if fs.get_file_info(norm).type != pafs.FileType.NotFound:
         raise FileExistsError(path)
     fs.create_dir(norm.rsplit("/", 1)[0], recursive=True)

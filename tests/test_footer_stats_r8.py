@@ -10,14 +10,25 @@ back to the scan rather than record weaker stats.
 import math
 import os
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from delta_lake_validation_spark.sources.acid.table import AcidTable
+from delta_lake_validation_spark.sources import footer_stats as fstats
+from delta_lake_validation_spark.sources.acid.table import (
+    AcidTable,
+    _acid_file_stats,
+)
 from delta_lake_validation_spark.sources.delta_log import (
+    _delta_file_stats,
     create_delta,
     strip_scheme,
+)
+from delta_lake_validation_spark.sources.footer_stats import (
+    staged_file_stats,
+    staged_stats_from_footers,
+    staged_stats_from_scan,
 )
 
 
@@ -33,6 +44,25 @@ def _eq(a, b):
     if isinstance(a, (tuple, list)) and isinstance(b, (tuple, list)):
         return len(a) == len(b) and all(_eq(x, y) for x, y in zip(a, b))
     return a == b and type(a) is type(b)
+
+
+def _parquet_paths(d):
+    return sorted(
+        os.path.join(r, f)
+        for r, _dirs, files in os.walk(d)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def _acid_stats(result):
+    """The AcidTable rendering of a footer_stats result."""
+    return {p: _acid_file_stats(*v) for p, v in result.items()}
+
+
+def _delta_stats(result):
+    """The DeltaTable rendering (add-entry stats JSON object)."""
+    return {p: _delta_file_stats(*v) for p, v in result.items()}
 
 
 def _tricky_df(spark):
@@ -61,8 +91,9 @@ def test_acid_footer_matches_scan(spark, tmp_path):
     t = AcidTable.create(spark, base, df.schema, partition_by=["p"])
     staging = os.path.join(base, "_stagetest")
     df.write.mode("overwrite").partitionBy("p").parquet(staging)
-    fo = t._staged_stats_footer(staging, df.schema, ["p"])
-    sc = t._staged_stats_scan(staging, df.schema, ["p"])
+    paths, cols = _parquet_paths(staging), t._stat_col_names(df.schema, ["p"])
+    fo = _acid_stats(staged_stats_from_footers(spark, paths, cols))
+    sc = _acid_stats(staged_stats_from_scan(spark, paths, cols))
     assert set(fo) == set(sc)
     assert len(fo) >= 5
     for key in sc:
@@ -70,8 +101,8 @@ def test_acid_footer_matches_scan(spark, tmp_path):
 
 
 def test_acid_footer_fallback_on_surprise(spark, tmp_path, monkeypatch):
-    """If the footer path raises for any reason the public _staged_stats
-    must transparently produce the scan result."""
+    """If the footer path raises for any reason staged_file_stats must
+    transparently produce the scan result."""
     base = os.path.join(str(tmp_path), "t2")
     df = _tricky_df(spark)
     t = AcidTable.create(spark, base, df.schema, partition_by=["p"])
@@ -81,9 +112,10 @@ def test_acid_footer_fallback_on_surprise(spark, tmp_path, monkeypatch):
     def boom(*a, **k):
         raise RuntimeError("footer unavailable")
 
-    monkeypatch.setattr(t, "_staged_stats_footer", boom)
-    via_public = t._staged_stats(staging, df.schema, ["p"])
-    direct_scan = t._staged_stats_scan(staging, df.schema, ["p"])
+    paths, cols = _parquet_paths(staging), t._stat_col_names(df.schema, ["p"])
+    monkeypatch.setattr(fstats, "staged_stats_from_footers", boom)
+    via_public = staged_file_stats(spark, paths, cols)
+    direct_scan = staged_stats_from_scan(spark, paths, cols)
     assert set(via_public) == set(direct_scan)
     for key in direct_scan:
         assert _eq(via_public[key], direct_scan[key])
@@ -92,9 +124,13 @@ def test_acid_footer_fallback_on_surprise(spark, tmp_path, monkeypatch):
 def test_delta_footer_matches_scan_shape(spark, tmp_path):
     """Delta-layer footer stats equal a replica of the original
     groupBy(input_file_name) scan aggregation, _stat_jsonable applied."""
+    import datetime
     from urllib.parse import unquote as _unq
 
-    from delta_lake_validation_spark.sources.delta_log import _stat_jsonable
+    from delta_lake_validation_spark.sources.delta_log import (
+        _stat_jsonable,
+        _staging_write_conf,
+    )
 
     dbase = os.path.join(str(tmp_path), "d1")
     ddf = spark.range(0, 3000).select(
@@ -109,18 +145,34 @@ def test_delta_footer_matches_scan_shape(spark, tmp_path):
         F.date_add(
             F.lit("2024-01-01").cast("date"), (F.col("id") % 300).cast("int")
         ).alias("dt"),
+        # 1950-01-01 plus id * (10 days + 123 us): values before and after
+        # 1970, sub-millisecond parts, and a null in every file
+        F.when(F.col("id") % 19 == 0, None)
+        .otherwise(
+            F.timestamp_micros(
+                F.lit(-631_152_000_000_000) + F.col("id") * 864_000_000_123
+            )
+        )
+        .alias("ts"),
         (F.col("id") % 3).cast("string").alias("p"),
     )
     dt = create_delta(spark, dbase, ddf.schema, partition_by=["p"])
     staging = os.path.join(dbase, "_abstage")
-    ddf.write.mode("overwrite").partitionBy("p").parquet(staging)
+    with _staging_write_conf(spark):
+        ddf.write.mode("overwrite").partitionBy("p").parquet(staging)
     paths = sorted(
         strip_scheme(pth)
         for pth, _ in dt.fs.list_files_with_size(staging)
         if pth.endswith(".parquet")
     )
-    stat_cols = ["k", "d", "fl", "s", "dt"]
-    fo = dt._staged_stats_footer(paths, stat_cols)
+    stat_cols = ["k", "d", "fl", "s", "dt", "ts"]
+    fo = _delta_stats(staged_stats_from_footers(spark, paths, stat_cols))
+
+    def _utc(v):
+        # a collected TIMESTAMP is a naive datetime in the driver's zone
+        if isinstance(v, datetime.datetime):
+            return v.astimezone(datetime.timezone.utc)
+        return v
 
     aggs = [F.count(F.lit(1)).alias("n")]
     for i, c in enumerate(stat_cols):
@@ -138,7 +190,8 @@ def test_delta_footer_matches_scan_shape(spark, tmp_path):
     ):
         mins, maxs, nulls = {}, {}, {}
         for i, c in enumerate(stat_cols):
-            lo, hi = _stat_jsonable(r[f"mn{i}"]), _stat_jsonable(r[f"mx{i}"])
+            lo = _stat_jsonable(_utc(r[f"mn{i}"]))
+            hi = _stat_jsonable(_utc(r[f"mx{i}"]))
             if lo is not None:
                 mins[c] = lo
             if hi is not None:
@@ -157,9 +210,8 @@ def test_delta_footer_matches_scan_shape(spark, tmp_path):
 
 
 def test_delta_timestamp_schema_stays_on_scan_path(spark, tmp_path):
-    """Timestamps are staged as INT96 (no footer stats): the commit must
-    still record full stats for them — i.e. the scan fallback fires and
-    the resulting add entries carry timestamp min/max."""
+    """Timestamps are staged as INT64 micros, whose footers carry
+    statistics: the add entries of a commit record timestamp min/max."""
     import json
 
     dbase = os.path.join(str(tmp_path), "dts")
@@ -203,8 +255,9 @@ def test_acid_footer_zero_row_file(spark, tmp_path):
         os.path.join(str(tmp_path), "empty", empty),
         os.path.join(staging, "part-empty.c000.snappy.parquet"),
     )
-    fo = t._staged_stats_footer(staging, df.schema, [])
-    sc = t._staged_stats_scan(staging, df.schema, [])
+    paths, cols = _parquet_paths(staging), t._stat_col_names(df.schema, [])
+    fo = _acid_stats(staged_stats_from_footers(spark, paths, cols))
+    sc = _acid_stats(staged_stats_from_scan(spark, paths, cols))
     # both omit the empty file; the consumer's .get default handles it
     assert set(fo) == set(sc)
     assert not any("part-empty" in k for k in fo)
@@ -219,28 +272,26 @@ def test_delta_variant_table_uses_footer_stats(spark, tmp_path):
     the non-variant columns, with no scan fallback."""
     import json
 
-    from delta_lake_validation_spark.sources import delta_log as dl
-
     dbase = os.path.join(str(tmp_path), "dvar")
     vdf = spark.range(0, 100).selectExpr(
         "id AS k", "parse_json(to_json(struct(id AS a, id * 2 AS b))) AS v"
     )
     dt = create_delta(spark, dbase, vdf.schema)
     calls = {"scan": 0}
-    orig = dl.DeltaTable._staged_stats_footer
+    orig = fstats.staged_stats_from_footers
 
-    def counting(self, *a, **k):
+    def counting(*a, **k):
         try:
-            return orig(self, *a, **k)
+            return orig(*a, **k)
         except Exception:
             calls["scan"] += 1
             raise
 
     try:
-        dl.DeltaTable._staged_stats_footer = counting
+        fstats.staged_stats_from_footers = counting
         dt.append(vdf)
     finally:
-        dl.DeltaTable._staged_stats_footer = orig
+        fstats.staged_stats_from_footers = orig
     assert calls["scan"] == 0
     snap = dt.snapshot()
     stats = [json.loads(a["stats"]) for a in snap.files.values()]
@@ -283,7 +334,8 @@ def test_acid_footer_tolerates_dropped_string_stats(spark, tmp_path, monkeypatch
     staging = os.path.join(base, "_stagetest")
     df.write.mode("overwrite").parquet(staging)
 
-    fo = t._staged_stats_footer(staging, df.schema, [])
+    paths, cols = _parquet_paths(staging), t._stat_col_names(df.schema, [])
+    fo = _acid_stats(staged_stats_from_footers(spark, paths, cols))
     assert fo
     for _rel, (n, st) in fo.items():
         assert n > 0 and st is not None
@@ -300,8 +352,8 @@ def test_acid_footer_tolerates_dropped_string_stats(spark, tmp_path, monkeypatch
         raise AssertionError("scan fallback must not fire for dropped "
                              "string statistics")
 
-    monkeypatch.setattr(t, "_staged_stats_scan", boom)
-    via_public = t._staged_stats(staging, df.schema, [])
+    monkeypatch.setattr(fstats, "staged_stats_from_scan", boom)
+    via_public = _acid_stats(staged_file_stats(spark, paths, cols))
     assert set(via_public) == set(fo)
     for key in fo:
         assert _eq(via_public[key], fo[key])
@@ -323,10 +375,146 @@ def test_delta_footer_tolerates_dropped_string_stats(spark, tmp_path):
         for f in os.listdir(staging)
         if f.endswith(".parquet")
     )
-    out = dt._staged_stats_footer(paths, ["k", "blob"])
+    out = _delta_stats(staged_stats_from_footers(spark, paths, ["k", "blob"]))
     assert out
     for st in out.values():
         assert st["numRecords"] > 0
         assert "k" in st["minValues"] and st["nullCount"]["k"] == 0
         assert "blob" not in st["minValues"]
         assert "blob" not in st["nullCount"]
+
+
+def _job_ids(spark):
+    """Ids of every job in the status store, after the listener bus has
+    delivered all pending events."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(spark.sparkContext._jvm.java.util.ArrayList())
+    return {jobs.apply(i).jobId() for i in range(jobs.length())}
+
+
+def test_delta_timestamp_append_starts_one_job(spark, tmp_path):
+    """A Delta append to a table with a TIMESTAMP column is the staging
+    write and nothing else: its stats come from the staged footers, not
+    from a re-scan of the staged files.  A decimal column, whose INT64
+    footer bounds pyarrow cannot convert, does not send it to the scan."""
+    df = spark.range(0, 100).select(
+        F.col("id").alias("k"),
+        F.timestamp_seconds(F.col("id") * 3600 + 1_700_000_000).alias("order_time"),
+        (F.col("id") / 7).cast("decimal(10,2)").alias("price"),
+    )
+    dt = create_delta(spark, os.path.join(str(tmp_path), "tsjobs"), df.schema)
+    dt.append(df)
+    before = _job_ids(spark)
+    dt.append(df)
+    assert len(_job_ids(spark) - before) == 1
+
+
+@pytest.fixture
+def new_york_tz(monkeypatch):
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_delta_timestamp_stats_utc_on_scan_fallback(
+    spark, tmp_path, monkeypatch, new_york_tz
+):
+    """Timestamp stats are UTC instants whatever the driver's zone: a row
+    at 17:00 UTC is recorded as 17:00Z by the scan fallback exactly as by
+    the footers (a collected TIMESTAMP is a naive local-zone datetime, so
+    rendering it directly would record 12:00Z here)."""
+    import json
+
+    df = spark.range(0, 1).select(
+        F.col("id").alias("k"),
+        F.timestamp_seconds(F.lit(1_704_128_400)).alias("ts"),  # 17:00Z
+    ).coalesce(1)
+    dt = create_delta(spark, os.path.join(str(tmp_path), "tz"), df.schema)
+    dt.append(df)  # footer path
+
+    def boom(*a, **k):
+        raise OSError("footer unavailable")
+
+    monkeypatch.setattr(fstats, "staged_stats_from_footers", boom, raising=False)
+    dt.append(df)  # scan fallback
+    stats = [json.loads(a["stats"]) for a in dt.snapshot().files.values()]
+    assert len(stats) == 2
+    for st in stats:
+        assert st["minValues"]["ts"] == "2024-01-01T17:00:00.000000Z", st
+        assert st["maxValues"]["ts"] == "2024-01-01T17:00:00.000000Z", st
+    assert stats[0] == stats[1]
+
+
+def test_convert_max_stats_survive_nan_row_group(spark, tmp_path):
+    """CONVERT merges row-group bounds NaN-aware.  Spark's writer can put
+    NaN as a row group's max; an order-dependent max over the row groups
+    then records the first row group's max for the whole file, and
+    read_where skips the file for every value above it.  A decimal column
+    (bounds pyarrow cannot convert) gets a null count and no bounds."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    from delta_lake_validation_spark.sources.delta_log import convert_to_delta
+
+    loc = os.path.join(str(tmp_path), "cnan")
+    spark.range(0, 3701).select(
+        F.when(F.col("id") == 3700, F.lit(float("nan")))
+        .otherwise(F.col("id").cast("double"))
+        .alias("x"),
+        F.col("id").cast("decimal(10,2)").alias("d"),
+    ).coalesce(1).write.option("parquet.block.size", 16 * 1024).parquet(loc)
+    [path] = _parquet_paths(loc)
+    assert pq.read_metadata(path).num_row_groups >= 2
+    t = convert_to_delta(spark, loc)
+    [add] = t.snapshot().files.values()
+    st = json.loads(add["stats"])
+    assert st["numRecords"] == 3701
+    assert st["minValues"]["x"] == 0.0
+    assert "x" not in st["maxValues"]  # NaN: unknown, so never pruned on
+    assert st["nullCount"]["d"] == 0 and "d" not in st["minValues"]
+    assert t.read_where({"x": (3000.0, 1e9)}).count() == 700
+
+
+def test_staging_conf_shared_by_overlapping_writers(spark):
+    """Staged writes overlapping on one session: the first to leave must
+    not restore the session's confs under another, and the last to leave
+    restores them."""
+    import sys
+    import threading
+
+    from delta_lake_validation_spark.sources.delta_log import _staging_write_conf
+
+    key = "spark.sql.parquet.outputTimestampType"
+    before = spark.conf.get(key)
+    a, b = _staging_write_conf(spark), _staging_write_conf(spark)
+    a.__enter__()
+    b.__enter__()
+    a.__exit__(None, None, None)
+    assert spark.conf.get(key) == "TIMESTAMP_MICROS"
+    b.__exit__(None, None, None)
+    assert spark.conf.get(key) == before
+
+    seen = []
+
+    def writer():
+        for _ in range(20):
+            with _staging_write_conf(spark):
+                seen.append(spark.conf.get(key))
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=writer) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == ["TIMESTAMP_MICROS"] * 160
+    assert spark.conf.get(key) == before
